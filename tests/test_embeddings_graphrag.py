@@ -376,7 +376,6 @@ def test_hop_bfs_celebrity_node_guard(spark):
     exp = sorted(exp)[:30]
     assert got == exp
     # the pre-cap salt fan-out bounds any single sort partition to
-    # ~degree/_PRECAP_SALTS rows (the plan itself is truncated by
-    # hop_bfs's localCheckpoint, so the guard is asserted by value
-    # equality above plus the constant here)
+    # ~degree/_PRECAP_SALTS rows (the salted exchange is asserted on the
+    # plan in test_graphrag_parity)
     assert gr._PRECAP_SALTS >= 64

@@ -12,6 +12,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """48g, or half the host's physical memory when that is less: a heap
+    cap above RAM lets a long-lived local JVM grow until the kernel's
+    out-of-memory killer ends it."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{max(1, min(48, phys // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "trustgraph-spark",
     cores: int | None = None,
@@ -51,9 +62,12 @@ def get_spark(
         # Undersizing it GC-stalls wide stages (measured: 8g at 32 cores on
         # a 1M-turn run degraded scaling efficiency from 0.79 to ~0.45, and
         # 24g GC-walled the 3M-turn scaling run — BENCH/BASELINE.md).  48g
-        # default in this 128 GiB sandbox; on a cluster this is ordinary
+        # default, capped to fit the host; on a cluster this is ordinary
         # per-executor memory sizing and the env var overrides.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
         # Broadcast dimension tables (labels, vocab, mapping) aggressively;
         # at 100 TB the fact side never broadcasts, the dims always should.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
@@ -71,8 +85,17 @@ def get_spark(
     # threads share ONE host disk, which serializes shuffle IO and destroys
     # core-scaling that a real cluster (per-executor disks) would have.
     # Use the tmpfs when present so shuffle IO scales with memory bandwidth,
-    # like per-executor local SSDs do on a real cluster.
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
+    # like per-executor local SSDs do on a real cluster — unless the caller
+    # names its own local dir (``extra_conf`` or $SPARK_LOCAL_DIRS, which
+    # Spark prefers over spark.local.dir).
+    own_local_dir = "spark.local.dir" in (extra_conf or {}) or os.environ.get(
+        "SPARK_LOCAL_DIRS"
+    )
+    if (
+        not own_local_dir
+        and os.path.isdir("/dev/shm")
+        and os.access("/dev/shm", os.W_OK)
+    ):
         shm = "/dev/shm/spark-local"
         os.makedirs(shm, exist_ok=True)
         builder = builder.config("spark.local.dir", shm)
